@@ -1,6 +1,8 @@
 """The ``catalog_batch`` workload: one thread of this process runs
 a fixed set of catalog operators, seed-shuffled in every pass, as
 ``fn(spark, sf_dir)`` then ``.collect()``; no service layer is involved.
+The reported pass time is the sum of each operator's median run time,
+so a run that ends part-way through a pass still counts every run.
 
 Set-up hashes the rows of every operator's DuckDB twin (``oracle_sql``);
 every operator run must match that hash.
@@ -11,6 +13,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import hashlib
+import json
 import math
 import os
 import random
@@ -18,7 +21,6 @@ import statistics
 import subprocess
 import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from perfbench import common, datagen
 
@@ -109,10 +111,46 @@ def oracle_hashes(paths: dict[str, str], cat) -> dict[str, tuple[list[str], str]
         duck.close()
 
 
+def expected_hashes(paths: dict[str, str], cat) -> dict[str, tuple[list[str], str]]:
+    """``oracle_hashes``, computed once per checkout.
+
+    The tables do not depend on ``--seed``, and the twins take DuckDB
+    about 11 s on 4 cores, which must not run beside the warm-up pass
+    (see ``catalog_batch``). So the hashes are kept under
+    ``.perfbench_cache/`` in a file named by a digest of everything they
+    depend on: DuckDB's version, the bytes of every table file, each
+    twin's SQL and this module's normalization code."""
+    import duckdb
+
+    key = hashlib.sha256()
+    parts = [duckdb.__version__.encode(), str(CATALOG_SF).encode()]
+    parts += [cat[op].oracle.encode() for op in OPERATORS]
+    for path in [paths[name] for name in datagen.ALL_TABLES] + [__file__]:
+        with open(path, "rb") as f:
+            parts.append(f.read())
+    for part in parts:
+        key.update(hashlib.sha256(part).digest())
+    path = os.path.join(common.CACHE_DIR, f"catalog-oracle-{key.hexdigest()[:32]}.json")
+    try:
+        with open(path) as f:
+            return {op: (cols, digest) for op, (cols, digest) in json.load(f).items()}
+    except (OSError, ValueError):
+        pass
+    want = oracle_hashes(paths, cat)
+    os.makedirs(common.CACHE_DIR, exist_ok=True)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(want, f)
+    os.replace(tmp, path)  # a run beside this one reads all of it or none
+    return want
+
+
 def catalog_batch(rd: common.RunDir, seed: int, seconds: float, traced: bool) -> dict:
-    """``WARM_PASSES`` untimed passes over ``OPERATORS`` in a fresh
-    session, then timed passes until ``seconds`` have passed, at least
-    one. Every operator run is built, collected and hash-matched against
+    """The DuckDB twins, then ``WARM_PASSES`` untimed passes over
+    ``OPERATORS`` in a fresh session, then timed passes until ``seconds``
+    have passed and every
+    operator ran at least once; the last pass stops where the time ran
+    out. Every operator run is built, collected and hash-matched against
     its DuckDB twin."""
     ph = common.Phases()
     paths = datagen.write_tables(rd.sub("data"), CATALOG_SF)
@@ -145,51 +183,63 @@ def catalog_batch(rd: common.RunDir, seed: int, seconds: float, traced: bool) ->
         jobs = {op: [] for op in OPERATORS}
         results = []  # (op, columns, rows) of every run, checked at the end
 
-        def run_pass(timed: bool) -> float:
+        def run_op(op: str, timed: bool) -> None:
+            j0 = int(scheduler.nextJobId()) if traced else 0
+            b0 = time.perf_counter()
+            df = cat[op].fn(spark, sf_dir)
+            b1 = time.perf_counter()
+            rows = df.collect()
+            b2 = time.perf_counter()
+            results.append((op, df.columns, rows))
+            if timed:
+                if traced:
+                    jobs[op].append(int(scheduler.nextJobId()) - j0)
+                build[op].append((b1 - b0) * 1000)
+                execute[op].append((b2 - b1) * 1000)
+
+        def shuffled() -> list[str]:
             order = list(OPERATORS)
             rng.shuffle(order)
-            p0 = time.perf_counter()
-            for op in order:
-                j0 = int(scheduler.nextJobId()) if traced else 0
-                b0 = time.perf_counter()
-                df = cat[op].fn(spark, sf_dir)
-                b1 = time.perf_counter()
-                rows = df.collect()
-                b2 = time.perf_counter()
-                results.append((op, df.columns, rows))
-                if timed:
-                    if traced:
-                        jobs[op].append(int(scheduler.nextJobId()) - j0)
-                    build[op].append((b1 - b0) * 1000)
-                    execute[op].append((b2 - b1) * 1000)
-            return time.perf_counter() - p0
+            return order
 
-        # the DuckDB twins run while the warm-up pass compiles Spark's code
-        with ThreadPoolExecutor(1) as pool:
-            oracle = pool.submit(oracle_hashes, paths, cat)
-            for _ in range(WARM_PASSES):
-                run_pass(timed=False)
-            want = oracle.result()
+        # Nothing runs beside the twins or the warm-up pass: the first timed
+        # pass still runs on the JVM's warm-up curve (passes keep getting
+        # faster for minutes), and how far background JIT compilation got
+        # depends on the CPU it was left. With DuckDB on other cores during
+        # the warm-up pass, timed passes spread by a quarter between runs.
+        want = expected_hashes(paths, cat)
+        ph.mark("oracle")
+        for _ in range(WARM_PASSES):
+            for op in shuffled():
+                run_op(op, timed=False)
         ph.mark("warm")
-        passes = []
         deadline = time.monotonic() + seconds
-        while not passes or time.monotonic() < deadline:
-            passes.append(run_pass(timed=True))
+        t_measure = time.perf_counter()
+        timed_runs = 0
+        while timed_runs < len(OPERATORS) or time.monotonic() < deadline:
+            for op in shuffled():
+                if timed_runs >= len(OPERATORS) and time.monotonic() >= deadline:
+                    break
+                run_op(op, timed=True)
+                timed_runs += 1
+        t_measure = time.perf_counter() - t_measure
         ph.mark("measure")
         rss = common.vm_hwm_mb(os.getpid()) + common.vm_hwm_mb(common.jvm_pid(spark))
     finally:
         common.stop_spark(spark)
     ph.mark("stop")
     failed = sum(not matches(want[op], cols, rows) for op, cols, rows in results)
+    run_ms = {op: [b + e for b, e in zip(build[op], execute[op])] for op in OPERATORS}
     out = {
         "config": cfg, "setup_starts_s": starts, "attempted": len(results),
-        "failed": failed, "peak_rss_mb": rss, "passes_s": passes, "phases": ph.times,
+        "failed": failed, "peak_rss_mb": rss, "phases": ph.times,
+        "runs_per_op": {op: len(v) for op, v in run_ms.items()},
         "reads": {
-            "n": len(passes),
-            "p50_ms": statistics.median(passes) * 1000,
+            "n": timed_runs,
+            "p50_ms": sum(statistics.median(v) for v in run_ms.values()),
             "tail_pct": 100,
-            "tail_ms": max(passes) * 1000,
-            "throughput": len(passes) * len(OPERATORS) / sum(passes),
+            "tail_ms": sum(max(v) for v in run_ms.values()),
+            "throughput": timed_runs / t_measure,
         },
     }
     if traced:

@@ -14,6 +14,7 @@ import uuid
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH_DIR = os.path.join(REPO_ROOT, "perfbench")
 RUNS_DIR = os.path.join(REPO_ROOT, ".perfbench_runs")
+CACHE_DIR = os.path.join(REPO_ROOT, ".perfbench_cache")
 PROTOCOL_PREFIX = "@@perfbench "
 
 

@@ -52,6 +52,11 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    if os.environ.get("PYTHONHASHSEED") != "0":
+        # one string-hash order in this process and every one it starts,
+        # so set and dict iteration in the program is the same in every run
+        os.environ["PYTHONHASHSEED"] = "0"
+        os.execv(sys.executable, [sys.executable, os.path.abspath(__file__)] + sys.argv[1:])
     # a terminated run still stops its processes and removes its files
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not os.path.isdir(os.path.join(common.REPO_ROOT, "cloudfloe_spark")):
@@ -78,8 +83,9 @@ def main() -> int:
                     f"commit_p50_ms={out['commit_p50_ms']:.1f} "
                     f"read_p50_ms={out['churn_read_p50_ms']:.1f} "
                     f"writer_errors={out['writer_errors']}")
-    if "passes_s" in out:
-        common.emit("batch_pass_s " + " ".join(f"{s:.3f}" for s in out["passes_s"]))
+    if "runs_per_op" in out:
+        common.emit("timed runs per operator " + " ".join(
+            f"{op}={n}" for op, n in out["runs_per_op"].items()))
     if args.trace:
         layers = out["layers"]
         metrics = {name: (float(layers.get(name, 0.0)), unit) for name, unit in per_layer_names()}

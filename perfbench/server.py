@@ -58,9 +58,10 @@ def duckdb_cursor_per_call() -> None:
     duckdb.execute = execute
 
 
-def build_table(spark, root: str, batches: list[str], delete: str, ts0_ms: int) -> dict:
-    """One Iceberg v2 snapshot per batch file, then one merge-on-read
-    delete; returns the snapshot ids in commit order."""
+def build_table(spark, root: str, batches: list[str], delete: str | None, ts0_ms: int) -> dict:
+    """One Iceberg v2 snapshot per batch file, then, unless ``delete`` is
+    None, one merge-on-read delete; returns the snapshot ids in commit
+    order."""
     import pyarrow.parquet as pq
 
     from cloudfloe_spark.sources.iceberg_fixture import LocalIcebergTable
@@ -73,8 +74,9 @@ def build_table(spark, root: str, batches: list[str], delete: str, ts0_ms: int) 
         table.append_snapshot([t], timestamp_ms=ts0_ms + i * 1000)
         for i, t in enumerate(tables)
     ]
-    res = delete_where(spark, root, delete, timestamp_ms=ts0_ms + len(ids) * 1000)
-    ids.append(res["snapshot_id"])
+    if delete is not None:
+        res = delete_where(spark, root, delete, timestamp_ms=ts0_ms + len(ids) * 1000)
+        ids.append(res["snapshot_id"])
     return {"snapshots": ids, "build_s": time.perf_counter() - t0}
 
 

@@ -1,7 +1,8 @@
 """The ``service_mix`` workload: closed-loop HTTP clients in this process
-against ``perfbench/server.py`` in its own, followed by the
-``iceberg_churn`` phase, in which readers check every answer for
-freshness while a writer commits beside the service.
+against ``perfbench/server.py`` in its own. Before the timed loop comes
+the ``iceberg_churn`` phase, on a table of its own, in which readers
+check every answer for freshness while a writer commits beside the
+service; it also warms the service up.
 
 Set-up builds an Iceberg v2 table from the seeded ``orders`` table (20
 appended snapshots plus one merge-on-read delete) and computes every
@@ -34,11 +35,16 @@ SERVICE_SF = 0.1
 N_BATCHES = 20
 ROW_LIMIT = 1000
 SETUP_STARTS = 2
+#: closed-loop clients of the timed loop: half the cores, so the
+#: service's Spark tasks and JIT threads are not queued behind them
+CLIENTS = 2
+CHURN_READERS = 3
 WARM_S = 2.0
-CHURN_S = 6.0
+CHURN_S = 5.0
+CHURN_MAX_S = 30.0
 CHURN_CYCLES = 40
 WRITER_PERIOD_S = 1.0
-COMPACT_EVERY = 3
+COMPACT_EVERY = 1
 REJECTS = [
     "SELECT 1 AS a; SELECT 2 AS b",
     "DROP TABLE orders",
@@ -209,6 +215,7 @@ class IcebergFixture:
     def __init__(self, run_dir: str, orders: pa.Table, seed: int) -> None:
         rng = random.Random("iceberg-layout")
         self.root = os.path.join(run_dir, "iceberg", "orders")
+        self.churn_root = os.path.join(run_dir, "iceberg", "orders_churn")
         bdir = os.path.join(run_dir, "batches")
         os.makedirs(bdir)
         n = orders.num_rows
@@ -227,13 +234,18 @@ class IcebergFixture:
         self.states.append(oracle.delete_rows(self.states[-1], "o_custkey", self.deleted))
         self.custkeys = random.Random(f"custkeys:{seed}").sample(range(n_cust), 8)
 
-    def build(self, srv: ServerProc) -> list[int]:
-        out = srv.call(
+    def build(self, srv: ServerProc) -> None:
+        """The read-only table of the timed loop (``snapshots``: one per
+        state) and the ``iceberg_churn`` phase's table, the same batches
+        without the delete (``churn_snapshots``)."""
+        self.snapshots = srv.call(
             "build_table", "table", root=self.root, batches=self.paths,
             delete=self.delete_sql, ts0_ms=1_700_000_000_000,
-        )
-        self.snapshots = out["snapshots"]
-        return self.snapshots
+        )["snapshots"]
+        self.churn_snapshots = srv.call(
+            "build_table", "table", root=self.churn_root, batches=self.paths,
+            delete=None, ts0_ms=1_700_000_000_000,
+        )["snapshots"]
 
 
 class Bag:
@@ -293,8 +305,11 @@ def status_request(root: str, state: int) -> Request:
 
 def iceberg_request(shape: int, root: str, snapshots: list[int], custkeys: list[int],
                     bag: Bag) -> Request:
-    """Iceberg read shape ``shape`` (0-3) with seeded constants; time
-    travel goes to the first, every fifth and the last snapshot."""
+    """Iceberg read shape ``shape`` (0-3) with seeded constants. Time
+    travel goes to one of the five snapshots before the delete: they
+    differ by one data file, so the seed's draws leave the cost of the
+    requests the same (snapshot 0 reads one file, the last one twenty
+    plus the deletes, and costs nearly three times as much)."""
     if shape == 0:
         return status_request(root, len(snapshots) - 1)
     if shape == 1:
@@ -306,7 +321,7 @@ def iceberg_request(shape: int, root: str, snapshots: list[int], custkeys: list[
             f"point:{c}",
         )
     if shape == 2:
-        i = bag.draw(range(0, len(snapshots), 5))
+        i = bag.draw(range(len(snapshots) - 6, len(snapshots) - 1))
         return Request(
             "ice_version",
             "SELECT COUNT(*) AS n, SUM(o_totalprice) AS total "
@@ -386,10 +401,28 @@ def closed_loop(port: int, sequences: list[list[Request]], seconds: float) -> li
     return [r for rs in results for r in rs]
 
 
-def read_metrics(results: list[Result]) -> dict:
-    """Latency of every result, and results completed per second over the
-    span from the first request sent to the last answer."""
+def mix_p50_ms(results: list[Result], weights: dict[str, int]) -> float:
+    """The median latency of each request kind, averaged with the kind's
+    share of the mix as weight, in ms.
+
+    The mix is bimodal (parquet requests take about half the time of
+    Iceberg scans), so the median of the pooled latencies sits on the
+    cliff between the two modes and jumps with the few requests that
+    happen to straddle it; per-kind medians do not."""
+    by_kind: dict[str, list[float]] = {}
+    for r in results:
+        by_kind.setdefault(r.req.kind, []).append(r.t1 - r.t0)
+    kinds = [k for k in weights if k in by_kind]
+    total = sum(weights[k] for k in kinds)
+    return 1000 * sum(weights[k] * statistics.median(by_kind[k]) for k in kinds) / total
+
+
+def read_metrics(results: list[Result], weights: dict[str, int]) -> dict:
+    """Latency of the results (the mix-weighted median, the pooled tail)
+    and results completed per second over the span from the first
+    request sent to the last answer."""
     lat = common.latency_summary([r.t1 - r.t0 for r in results])
+    lat["p50_ms"] = mix_p50_ms(results, weights)
     lat["throughput"] = len(results) / (max(r.t1 for r in results) - min(r.t0 for r in results))
     return lat
 
@@ -399,7 +432,7 @@ def trace_phases(srv: ServerProc, run_dir: str, seconds: float, run_loop,
     """The traced run: the same loop untraced and traced in turn, three
     times (so warm-up drift falls on both), then one client with Spark job
     counting. Returns the per-layer metrics and every result."""
-    slot = seconds / 9
+    slot = seconds / 6
     untraced: list[Result] = []
     traced: list[Result] = []
     for _ in range(3):
@@ -413,7 +446,7 @@ def trace_phases(srv: ServerProc, run_dir: str, seconds: float, run_loop,
         rep = trace.layer_report(json.load(f))
     srv.call("trace_reset", "reset")
     srv.call("trace_on", "tracing", jobs=True)
-    single = one_client(seconds / 3)
+    single = one_client(seconds / 4)
     srv.call("trace_dump", "dumped", path=path)
     with open(path) as f:
         rep_jobs = trace.layer_report(json.load(f))
@@ -470,13 +503,13 @@ def expected_answers(fx: IcebergFixture, seqs: list[list[Request]]) -> dict[str,
 
 
 def service_mix(rd: common.RunDir, seed: int, seconds: float, traced: bool) -> dict:
-    """Closed loop of ``nproc`` (at most 4) clients over the mix, then the
-    ``iceberg_churn`` phase on the same table."""
+    """The ``iceberg_churn`` phase on its own table, then a closed loop of
+    ``CLIENTS`` clients over the mix."""
     ph = common.Phases()
     paths = datagen.write_tables(rd.sub("data"), SERVICE_SF)
     orders, docs = paths["orders"], paths["documents"]
     fx = IcebergFixture(rd.path, pq.read_table(orders), seed)
-    n_clients = min(4, common.n_cpus())
+    n_clients = min(CLIENTS, common.n_cpus())
     ph.mark("inputs")
     srv, starts = start_server(rd.path, seed)
     ph.mark("starts")
@@ -490,15 +523,22 @@ def service_mix(rd: common.RunDir, seed: int, seconds: float, traced: bool) -> d
         ]
         expected = expected_answers(fx, seqs)
         churn = Churn(rd, fx, seed, cycles=CHURN_CYCLES)
+        weights: dict[str, int] = {}
+        for r in (r for seq in seqs for r in seq):
+            weights[r.kind] = weights.get(r.kind, 0) + 1
         ph.mark("expected")
-        # warm-up: every distinct request shape once, then the loop itself
-        shapes = {r.kind: r for seq in seqs for r in seq}
-        # one request alone first: concurrent first requests on a fresh
-        # service race in ensure_package_shipped, which rewrites the
-        # package zip Spark already registered, and every later task
-        # fails on the changed file (see perfbench/README.md)
+        # warm-up: one request alone first, because concurrent first
+        # requests on a fresh service race in ensure_package_shipped,
+        # which rewrites the package zip Spark already registered, and
+        # every later task fails on the changed file (see
+        # perfbench/README.md); then the churn phase, every distinct
+        # request shape once and the loop itself
         warm = [send(srv.port, status_request(fx.root, N_BATCHES))]
-        with ThreadPoolExecutor(n_clients) as pool:
+        ph.mark("warm")
+        churned = churn_phase(srv, churn, seed, CHURN_READERS)
+        ph.mark("churn")
+        shapes = {r.kind: r for seq in seqs for r in seq}
+        with ThreadPoolExecutor(CHURN_READERS + 1) as pool:
             warm += pool.map(lambda r: send(srv.port, r), shapes.values())
         warm += closed_loop(srv.port, seqs, WARM_S)
         ph.mark("warm")
@@ -510,8 +550,6 @@ def service_mix(rd: common.RunDir, seed: int, seconds: float, traced: bool) -> d
         else:
             timed = closed_loop(srv.port, seqs, seconds)
         ph.mark("measure")
-        churned = churn_phase(srv, fx, churn, seed, n_clients - 1)
-        ph.mark("churn")
         rss = srv.peak_rss_mb()
     except Exception:
         print(f"server exit code {srv.proc.poll()}; log ends:\n{srv.log_tail()}",
@@ -538,12 +576,12 @@ def service_mix(rd: common.RunDir, seed: int, seconds: float, traced: bool) -> d
         if churned else 0.0,
     }
     if traced:
-        layers.update(write_layers(srv.commits, fx.root, churn.tables[-1].num_rows))
+        layers.update(write_layers(srv.commits, churn.root, churn.tables[-1].num_rows))
         layers["iceberg_churn.read_p50_ms"] = out["churn_read_p50_ms"]
         layers["peak_rss_mb"] = rss
         out["layers"] = layers
     else:
-        out["reads"] = read_metrics(timed)
+        out["reads"] = read_metrics(timed, weights)
     return out
 
 
@@ -557,7 +595,9 @@ class Churn:
     def __init__(self, rd: common.RunDir, fx: IcebergFixture, seed: int, cycles: int) -> None:
         rng = random.Random(f"iceberg_churn:{seed}")
         pend = rd.sub("pending")
-        base = fx.states[-1]
+        self.root = fx.churn_root
+        # the churn table holds the first len(churn_snapshots) states
+        base = fx.states[len(fx.churn_snapshots) - 1]
         next_key = int(pc.max(base.column("o_orderkey")).as_py()) + 1
         n_cust = int(pc.max(base.column("o_custkey")).as_py()) + 1
         self.appends, self.append_tables, self.delete_keys, self.deletes = [], [], [], []
@@ -575,13 +615,13 @@ class Churn:
             self.delete_keys.append(ks)
             self.deletes.append(f"o_custkey IN ({', '.join(map(str, ks))})")
         self.timeline = oracle.Timeline()
-        for sid in fx.snapshots:
+        for sid in fx.churn_snapshots:
             self.timeline.add(sid, 0, float("-inf"), float("-inf"))
         self.tables = [base]
         self.answers = [oracle.total_answer(base)]
         # the pre-run snapshots answer time travel with their own states
         self.snapshot_answers = {
-            sid: oracle.total_answer(st) for sid, st in zip(fx.snapshots, fx.states)
+            sid: oracle.total_answer(st) for sid, st in zip(fx.churn_snapshots, fx.states)
         }
 
     def apply(self, commits: list[dict]) -> None:
@@ -626,12 +666,12 @@ def churn_current(root: str) -> Request:
     )
 
 
-def churn_reader(port: int, root: str, seed: int, client: int, deadline: float) -> list[Result]:
+def churn_reader(port: int, root: str, seed: int, client: int, keep_reading) -> list[Result]:
     """Closed loop of one reader: the current snapshot, or the snapshot
     listing followed by time travel to the previous snapshot."""
     rng = random.Random(f"iceberg_churn:{seed}:{client}")
     out = []
-    while time.monotonic() < deadline:
+    while keep_reading():
         if rng.random() < 0.5:
             out.append(send(port, churn_current(root)))
             continue
@@ -653,16 +693,23 @@ def churn_reader(port: int, root: str, seed: int, client: int, deadline: float) 
     return out
 
 
-def churn_phase(srv: ServerProc, fx: IcebergFixture, churn: Churn, seed: int,
-                readers: int) -> list[Result]:
-    """``CHURN_S`` seconds of readers while the writer commits beside the
-    service; returns the reads."""
-    srv.call("writer_start", "writer_started", root=fx.root, appends=churn.appends,
+def churn_phase(srv: ServerProc, churn: Churn, seed: int, readers: int) -> list[Result]:
+    """Readers while the writer commits beside the service, for
+    ``CHURN_S`` seconds and until the writer has compacted once (at most
+    ``CHURN_MAX_S`` seconds); returns the reads."""
+    srv.call("writer_start", "writer_started", root=churn.root, appends=churn.appends,
              deletes=churn.deletes, compact_every=COMPACT_EVERY, period_s=WRITER_PERIOD_S)
-    deadline = time.monotonic() + CHURN_S
+    t0 = time.monotonic()
+
+    def keep_reading() -> bool:
+        now = time.monotonic()
+        compacted = any(c["op"] == "maintenance.compact" for c in srv.commits)
+        return now < t0 + CHURN_S or (
+            not compacted and not srv.writer_errors and now < t0 + CHURN_MAX_S)
+
     with ThreadPoolExecutor(max(1, readers)) as pool:
         parts = list(pool.map(
-            lambda i: churn_reader(srv.port, fx.root, seed, i, deadline),
+            lambda i: churn_reader(srv.port, churn.root, seed, i, keep_reading),
             range(max(1, readers)),
         ))
     srv.call("writer_stop", "writer_stopped")

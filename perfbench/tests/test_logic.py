@@ -101,6 +101,17 @@ def test_expected_reject_answered_200_is_a_failure():
     assert not service.check(service.Result(req, 0.0, 1.0, 500, None), {})
 
 
+def test_mix_p50_weights_each_kind_median_by_its_share():
+    def res(kind: str, seconds: float) -> service.Result:
+        return service.Result(service.Request(kind, "SELECT ...", "x"), 0.0, seconds, 200, [])
+
+    fast = [res("demo", s) for s in (0.1, 0.1, 0.1, 9.0)]  # median 0.1 s
+    slow = [res("ice", s) for s in (0.5, 0.5)]  # median 0.5 s
+    assert math.isclose(service.mix_p50_ms(fast + slow, {"demo": 3, "ice": 1}), 200.0)
+    # a kind the run never answered leaves the weights of the others
+    assert math.isclose(service.mix_p50_ms(slow, {"demo": 3, "ice": 1}), 500.0)
+
+
 def test_rows_match_tolerates_float_order_noise_only():
     want = [["O", 3, 1.0e9], ["F", 2, 0.5]]
     assert oracle.rows_match([["F", 2, 0.5], ["O", 3, 1.0e9 + 1e-3]], want)
@@ -133,3 +144,29 @@ def test_layer_self_times_add_up_to_the_request():
         == (3000.0, 2000.0, 4000.0, 1000.0)
     assert sum(ms.values()) == rep["handler_ms"] == 10000.0
     assert rep["counts"]["iceberg_meta.listings"] == 2
+
+
+def test_catalog_expected_hashes_are_kept_per_input(tmp_path, monkeypatch):
+    from types import SimpleNamespace
+
+    from perfbench import catalog, datagen
+
+    monkeypatch.setattr(common, "CACHE_DIR", str(tmp_path / "cache"))
+    paths = {}
+    for name in datagen.ALL_TABLES:
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        with open(paths[name], "wb") as f:
+            f.write(name.encode())
+    cat = {op: SimpleNamespace(oracle=f"SELECT '{op}'") for op in catalog.OPERATORS}
+    calls = []
+
+    def oracle_hashes(paths, cat):
+        calls.append(1)
+        return {op: (["a"], f"{op}{len(calls)}") for op in catalog.OPERATORS}
+
+    monkeypatch.setattr(catalog, "oracle_hashes", oracle_hashes)
+    first = catalog.expected_hashes(paths, cat)
+    assert catalog.expected_hashes(paths, cat) == first and len(calls) == 1
+    with open(paths["orders"], "wb") as f:  # another table file: computed again
+        f.write(b"changed")
+    assert catalog.expected_hashes(paths, cat) != first and len(calls) == 2
