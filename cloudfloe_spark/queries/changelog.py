@@ -740,14 +740,15 @@ def iceberg_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def iceberg_cow_dml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COPY-ON-WRITE DML, driver-checked: the same partitioned fixture
     and DML script as ``iceberg_partitioned_dml_scan``, but run with
-    ``mode="copy-on-write"`` (`maintenance._cow_dml`) — affected data
-    files are rewritten and committed as removed + replacements, never
-    a delete file — and the final per-lang aggregate must equal the
-    merge-on-read entry's oracle exactly (the two modes are
+    ``mode="copy-on-write"`` (the row-delta core
+    `maintenance._row_delta`, fed by `maintenance._cow_dml`) — affected
+    data files are rewritten and committed as removed + replacements,
+    never a delete file — and the final per-lang aggregate must equal
+    the merge-on-read entry's oracle exactly (the two modes are
     semantically interchangeable; only the physical layout differs).
 
-    Scale shape: pass 1 reduces the pruned candidate scan to per-file
-    match counts; pass 2 rewrites only the affected files,
+    Scale shape: pass 1 reduces the pruned candidate scan to the
+    affected files' match coordinates; pass 2 rewrites only those files,
     partition-aware. Reads of the result pay NO merge-on-read anti-join
     (the table carries zero delete files — pinned structurally by
     tests/test_cow_dml.py).

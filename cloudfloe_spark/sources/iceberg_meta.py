@@ -295,17 +295,6 @@ def live_data_files(root: str, snapshot: dict) -> list[dict]:
     ]
 
 
-def has_delete_files(root: str, snapshot: dict) -> bool:
-    """True when the snapshot carries row-level delete files (manifest
-    content=1, or data_file.content in (1,2))."""
-    for e in manifest_entries(root, snapshot):
-        if e["status"] == 2:
-            continue
-        if e["manifest_content"] != 0 or e["data_file"].get("content", 0) != 0:
-            return True
-    return False
-
-
 def delete_file_records(root: str, snapshot: dict) -> list[dict]:
     """Live delete-file records (Iceberg v2 content 1=position, 2=equality)."""
     return [
@@ -918,13 +907,6 @@ def prune_position_deletes(
         except Exception:
             kept.append(d)
     return kept
-
-
-def has_equality_deletes(root: str, snapshot: dict) -> bool:
-    """True when the snapshot carries equality-delete files (content=2)."""
-    return any(
-        f.get("content", 0) == 2 for f in delete_file_records(root, snapshot)
-    )
 
 
 def equality_delete_records(root: str, snapshot: dict) -> list[dict]:

@@ -1,17 +1,31 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance, row-level DML and table statistics.
 
-The reference documents the small-file problem ("sluggish past ~10,000
-files", `reference/README.md:232`) and ADVISES compaction in an error
-message (`backend/main.py:405-413`) — but ships no tool. This module is
-that tool for parquet-layout tables: rewrite a directory into
-target-sized files.
+The module has three jobs:
 
-At scale this is the operation that keeps scan task counts sane: file
-listing, footer reads, and task-launch overhead are all O(files), and
-1000-executor clusters stall on millions of tiny files long before data
-volume matters. (For Iceberg tables with the runtime present, prefer the
-built-in ``rewrite_data_files`` procedure — this is the path-table
-equivalent.)
+- **Compaction and maintenance.** The reference documents the
+  small-file problem ("sluggish past ~10,000 files",
+  `reference/README.md:232`) and ADVISES compaction in an error message
+  (`backend/main.py:405-413`) — but ships no tool. Here: parquet-dir
+  compaction (:func:`compact_parquet`), Iceberg compaction and bin-pack
+  (:func:`compact_iceberg_table`, :func:`compact_small_files`),
+  snapshot expiry, orphan removal, manifest / delete-file / deletion-
+  vector rewrites and the scheduled :func:`maintain_iceberg_table`.
+  At scale this keeps scan task counts sane: file listing, footer reads
+  and task launches are all O(files).
+- **Row-level DML.** :func:`delete_where`, :func:`update_where`,
+  :func:`apply_changelog` and :func:`merge_into` each build only their
+  match plan and two frames — the retracted ``(file_path, pos)``
+  coordinates and the emitted rows — and hand them to ONE row-delta
+  core, :func:`_row_delta`, which writes deletion vectors (v3) or
+  sorted position deletes (v2) or rewrites the affected files, and owns
+  the single optimistic commit. The MOR/COW decision is the entry
+  point's ``mode`` argument: merge-on-read by default,
+  ``mode="copy-on-write"`` passes a rewrite callback to the core.
+- **Statistics.** Geo bounds, partition stats and ANALYZE (theta
+  sketches in Puffin files, with incremental per-file caches).
+
+Every commit goes through :func:`_commit_with_rebase`; the isolation
+policy per op is documented above :func:`_rebase_ok`.
 """
 
 from __future__ import annotations
@@ -1418,51 +1432,47 @@ def _decorate_dml_surface(df, variant_cols: list, ns_cols: list):
     return df
 
 
+def _write_form(c, col, variant_cols, ns_cols, dtype=None):
+    """Physical write form of a surface-typed value ``col`` for column
+    ``c``: v3 variant columns take JSON text and re-encode it to spec
+    binary (``json_variant_encode_udf``; fractional literals parse as
+    decimals, digit-exact on re-read); ns columns write longs at µs·1000,
+    the finest precision a Spark expression can carry. Other columns
+    cast to ``dtype`` when given."""
+    from pyspark.sql import functions as F
+
+    if c in variant_cols:
+        from cloudfloe_spark.functions.variant import (
+            json_variant_encode_udf,
+        )
+
+        return json_variant_encode_udf()(col.cast("string"))
+    if c in ns_cols:
+        return F.unix_micros(col.cast("timestamp")) * F.lit(1000).cast(
+            "bigint"
+        )
+    return col if dtype is None else col.cast(dtype)
+
+
 def _dml_out_col(c, assignments, cond, df_surface, variant_cols, ns_cols):
     """The written form of column ``c`` for a DML rewrite: plain columns
-    keep today's when(cond, expr).otherwise(old) shape; v3 variant / ns
+    keep the when(cond, expr).otherwise(old) shape; v3 variant / ns
     columns write their PHYSICAL form — untouched rows verbatim from
-    ``__cf_phys_<col>``, assigned rows re-encoded (JSON text → spec
-    binary via ``json_variant_encode_udf``; timestamps → ns longs at
-    µs·1000, the finest precision a Spark expression can carry).
+    ``__cf_phys_<col>``, assigned rows re-encoded (:func:`_write_form`).
     ``cond=None`` means every selected row is assigned (the MOR-update
     shape)."""
     from pyspark.sql import functions as F
 
-    if c in variant_cols:
-        phys = F.col(_PHYS + c)
-        if assignments and c in assignments:
-            from cloudfloe_spark.functions.variant import (
-                json_variant_encode_udf,
-            )
-
-            enc = json_variant_encode_udf()(
-                F.expr(assignments[c]).cast("string")
-            )
-            new = enc if cond is None else F.when(cond, enc).otherwise(phys)
-            return new.alias(c)
-        return phys.alias(c)
-    if c in ns_cols:
-        phys = F.col(_PHYS + c)
-        if assignments and c in assignments:
-            ns_val = (
-                F.unix_micros(
-                    F.expr(assignments[c]).cast("timestamp")
-                )
-                * F.lit(1000).cast("bigint")
-            )
-            new = (
-                ns_val
-                if cond is None
-                else F.when(cond, ns_val).otherwise(phys)
-            )
-            return new.alias(c)
-        return phys.alias(c)
-    if assignments and c in assignments:
-        expr = F.expr(assignments[c]).cast(df_surface.schema[c].dataType)
-        new = expr if cond is None else F.when(cond, expr).otherwise(F.col(c))
-        return new.alias(c)
-    return F.col(c)
+    old = (
+        F.col(_PHYS + c) if c in variant_cols or c in ns_cols else F.col(c)
+    )
+    if not (assignments and c in assignments):
+        return old.alias(c)
+    new = _write_form(
+        c, F.expr(assignments[c]), variant_cols, ns_cols,
+        df_surface.schema[c].dataType,
+    )
+    return (new if cond is None else F.when(cond, new).otherwise(old)).alias(c)
 
 
 def _with_source_row_ids(
@@ -2134,7 +2144,6 @@ def _write_data_files(
     partition's rows so a partition's files ≈ its row share, not one
     sliver per task) — cost tracks the match count, never the table.
     """
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
@@ -2208,12 +2217,7 @@ def _write_data_files(
         df if n_rows is None else _sized_write(df, n_rows, rows_per_file)
     )
     sized.write.mode(mode).parquet(out_dir)
-    out = []
-    for p in sorted(globmod.glob(os.path.join(out_dir, "*.parquet"))):
-        cnt = pq.ParquetFile(p).metadata.num_rows
-        if cnt:
-            out.append((p, cnt))
-    return out
+    return _parquets(out_dir)
 
 
 def _prune_dml_scan(root: str, meta_path, snap: dict, condition: str, paths: list) -> list:
@@ -2280,36 +2284,226 @@ def _ref_snapshot(root: str, meta_path, ref: str, op: str) -> dict:
     )
 
 
+def _parquets(d: str) -> "list[tuple[str, int]]":
+    """``(path, record count)`` of the non-empty parquet files a Spark
+    write left in ``d`` — the commit-ready form of a written batch
+    (footer reads only)."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(globmod.glob(os.path.join(d, "*.parquet"))):
+        cnt = pq.ParquetFile(f).metadata.num_rows
+        if cnt:
+            out.append((f, cnt))
+    return out
+
+
+def _dml_dir(root: str, tag: str, timestamp_ms: int) -> str:
+    """A fresh staging directory under ``data/`` for one DML write (uuid
+    suffix: a re-run op never collides with an abandoned attempt)."""
+    return os.path.join(
+        root, "data", f"{tag}-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
+    )
+
+
+def _write_position_deletes(
+    root: str, coords, n: int, rows_per_file: int, timestamp_ms: int,
+    tag: str = "deletes",
+) -> "list[tuple[str, int]]":
+    """Write ``(file_path, pos)`` coordinates as position-delete parquet
+    files: ``repartitionByRange`` + ``sortWithinPartitions`` on
+    (file_path, pos) keeps every file sorted as the spec requires while
+    the WRITE stays distributed (one shuffle sized by the ``n``
+    coordinates, never by table size; files sized by ``rows_per_file``).
+    Returns the written ``(path, count)`` entries."""
+    from pyspark.sql import functions as F
+
+    out_dir = _dml_dir(root, tag, timestamp_ms)
+    (
+        coords.repartitionByRange(
+            max(1, -(-n // rows_per_file)), F.col("file_path"), F.col("pos")
+        )
+        .sortWithinPartitions("file_path", "pos")
+        .write.mode("errorifexists")
+        .parquet(out_dir)
+    )
+    return _parquets(out_dir)
+
+
+def _row_delta(
+    spark, root: str, op: str, retract, n_retract: int, *,
+    result: dict, meta_path, snap: dict, paths: list,
+    timestamp_ms: int, rows_per_file: int, rebase: dict,
+    emitted=None, n_emitted: int = 0, tag: str = "",
+    rewrite=None, n_dropped: int = 0, ns_cols=(),
+    ref: "str | None" = None, summary_extra: "dict | None" = None,
+) -> dict:
+    """The row-delta core of every row-level DML entry point
+    (:func:`delete_where`, :func:`update_where`, :func:`apply_changelog`,
+    :func:`merge_into`): the entry point finds its matches and builds its
+    frames; this writes them and commits ONE snapshot.
+
+    ``retract`` holds the ``(file_path, pos)`` scan coordinates of the
+    ``n_retract`` rows the change removes; ``emitted`` (or None) the
+    ``n_emitted`` rows it adds (re-emitted updates, inserts). Callers
+    persist the frames they derive from their scan, so every write below
+    reads the cached match set instead of re-scanning the table.
+
+    Merge-on-read (``rewrite`` None) — the MOR/COW decision lives with
+    the entry point's ``mode``: retractions commit as DELETION VECTORS on
+    v3 tables (the spec forbids new position-delete files there;
+    executor-side roaring build, the driver collects only compressed
+    blobs) or as sorted position-delete files on v2; emitted rows land as
+    data files at the same commit's higher sequence. Deletes-only commits
+    are DELETE snapshots, anything with rows is an "overwrite". On a
+    branch (``ref``) the whole delta, deletion vectors included, stages
+    against the branch head — write-audit-publish on row-level changes.
+
+    Copy-on-write (``rewrite`` given): the data files holding a retracted
+    row are REWRITTEN instead — ``rewrite(affected)`` returns their
+    surviving/updated rows, written together with ``emitted`` and sized
+    from manifest record counts (``+ n_emitted - n_dropped``: no extra
+    count action), then committed as removed + replacements. Untouched
+    files carry at their original sequence numbers; time travel to the
+    pre-DML snapshot is intact.
+
+    The commit runs through :func:`_commit_with_rebase` under the entry
+    point's isolation policy (``rebase``: :func:`_rebase_ok` keyword
+    arguments over the scanned ``paths`` pinned at ``snap``). Fixture
+    commit functions resolve on their module at call time (tests inject
+    commit races there). ``result`` carries the entry point's own counts;
+    the core adds ``snapshot_id`` (None when nothing was written),
+    ``deletion_vectors`` on DV commits and ``files_rewritten`` on
+    copy-on-write, and fills ``delete_files`` when the entry point
+    reports it."""
+    from cloudfloe_spark.sources import iceberg_fixture as fx
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    ns_tz = _ns_tz_map(root, meta_path, ns_cols) if ns_cols else None
+    dvs, delete_files, removed, new_files = None, [], [], []
+    if rewrite is not None:
+        sfx = im.data_file_suffix
+        hit = set()
+        if n_retract:
+            fps = retract.select("file_path").distinct().collect()
+            hit = {sfx(r[0]) for r in fps}
+        removed = [p for p in paths if sfx(p) in hit]
+        parts = [rewrite(removed)] if removed else []
+        if emitted is not None and n_emitted:
+            parts.append(emitted)
+        stats = im.live_data_stats(root, snap) if removed else {}
+        recs = [(stats.get(p) or {}).get("records") for p in removed]
+        n_out = None
+        if all(r is not None for r in recs):
+            n_out = sum(recs) + n_emitted - n_dropped
+        if parts:
+            rows = parts[0]
+            for p_ in parts[1:]:
+                rows = rows.unionByName(p_)
+            new_files = _write_data_files(
+                spark, root, meta_path, rows, n_out, rows_per_file,
+                _dml_dir(root, tag, timestamp_ms), ns_tz=ns_tz,
+            )
+    else:
+        if n_retract:
+            meta = im.load_metadata(root, meta_path)
+            if int(meta.get("format-version") or 1) >= 3:
+                dvs = _collect_deletion_vectors(spark, retract)
+            else:
+                delete_files = _write_position_deletes(
+                    root, retract, n_retract, rows_per_file, timestamp_ms
+                )
+        if emitted is not None:
+            new_files = _write_data_files(
+                spark, root, meta_path, emitted, n_emitted, rows_per_file,
+                _dml_dir(root, tag, timestamp_ms), ns_tz=ns_tz,
+            )
+
+    out = dict(result)
+    if "delete_files" in out:
+        out["delete_files"] = [p for p, _ in delete_files]
+    if dvs:
+        out["deletion_vectors"] = len(dvs)
+    if rewrite is not None:
+        out["files_rewritten"] = len(removed)
+    if not (dvs or delete_files or new_files or removed):
+        out["snapshot_id"] = None
+        return out
+
+    def commit(mp):
+        if dvs:
+            return fx.commit_deletion_vector_snapshot(
+                root, dvs, new_data_files=new_files,
+                timestamp_ms=timestamp_ms, expected_metadata_path=mp,
+                summary_extra=summary_extra, parent_ref=ref,
+            )
+        if emitted is None and rewrite is None:
+            return fx.commit_delete_snapshot(
+                root, delete_files, timestamp_ms=timestamp_ms,
+                expected_metadata_path=mp, parent_ref=ref,
+            )
+        return fx.commit_row_delta_snapshot(
+            root,
+            new_data_files=new_files,
+            delete_files=delete_files,
+            removed_data_files=removed,
+            timestamp_ms=timestamp_ms,
+            expected_metadata_path=mp,
+            summary_extra=summary_extra,
+            parent_ref=ref,
+        )
+
+    out["snapshot_id"] = _commit_with_rebase(
+        root, op, commit, meta_path,
+        lambda: _rebase_ok(
+            root, scanned_paths=paths, pinned_snap=snap, ref=ref, **rebase
+        ),
+    )
+    return out
+
+
+def _dml_data_cols(df, lineage: bool) -> list:
+    """The table columns of a DML scan frame: without the scan
+    coordinates, the physical twins of v3 columns, and (lineage tables)
+    the row-lineage columns a rewrite materializes itself."""
+    return [
+        c
+        for c in df.columns
+        if c not in (_FP, _POS)
+        and not c.startswith(_PHYS)
+        and not (lineage and c in ("_row_id", _SEQ))
+    ]
+
+
+def _dml_coords(df):
+    """The ``(file_path, pos)`` retraction frame of a DML scan's rows."""
+    from pyspark.sql import functions as F
+
+    return df.select(F.col(_FP).alias("file_path"), F.col(_POS).alias("pos"))
+
+
 def _cow_dml(
-    spark,
-    root: str,
-    condition: str,
-    assignments: "dict[str, str] | None",
-    *,
-    timestamp_ms: int,
-    rows_per_file: int,
-    meta_path,
-    snap: dict,
-    paths: list,
-    n_live: int,
+    spark, root: str, condition: str,
+    assignments: "dict[str, str] | None", *,
+    timestamp_ms: int, rows_per_file: int,
+    meta_path, snap: dict, paths: list, n_live: int,
     ref: "str | None" = None,
 ) -> dict:
-    """Copy-on-write DML core (``mode="copy-on-write"`` of
-    :func:`delete_where` / :func:`update_where`): instead of committing
-    position-delete files (merge-on-read), REWRITE exactly the data files
-    that contain matching rows and commit them as removed + their
-    replacements — Iceberg's ``write.delete.mode=copy-on-write``. The
-    table stays delete-file-free, so reads pay no anti-join and engines
-    without delete support (the reference's own guard!) keep working;
-    the trade is write amplification proportional to the affected files.
+    """Copy-on-write match plan of :func:`delete_where` /
+    :func:`update_where` (``mode="copy-on-write"``): instead of
+    committing position deletes (merge-on-read), the data files that
+    contain matching rows are REWRITTEN and committed as removed + their
+    replacements by :func:`_row_delta` — Iceberg's
+    ``write.delete.mode=copy-on-write``. The table stays delete-file-free,
+    so reads pay no anti-join and engines without delete support (the
+    reference's own guard!) keep working; the trade is write
+    amplification proportional to the affected files.
 
-    Scale shape: pass 1 scans only the PRUNED candidate files and reduces
-    to per-file match counts (driver state = one row per affected file,
-    never row-sized); pass 2 re-scans only the AFFECTED files and writes
-    their surviving/updated rows partition-aware. Untouched files — even
-    pruned-in candidates with zero matches — are carried verbatim at
-    their original sequence numbers; time travel to the pre-DML snapshot
-    is intact.
+    Scale shape: pass 1 scans only the PRUNED candidate files for match
+    coordinates (persisted; the driver collects one row per affected
+    file, never row-sized state); pass 2 re-scans only the AFFECTED files
+    and writes their surviving/updated rows partition-aware. Pruned-in
+    candidates with zero matches are never rewritten.
 
     ``assignments=None`` means DELETE (drop matching rows); otherwise
     UPDATE (rewrite matching rows with the assignments applied, standard
@@ -2319,12 +2513,6 @@ def _cow_dml(
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        commit_row_delta_snapshot,
-    )
-
-    def _key(p: str) -> str:
-        return im.data_file_suffix(p)
 
     lineage = (
         im.load_metadata(root, meta_path).get("next-row-id") is not None
@@ -2343,110 +2531,87 @@ def _cow_dml(
         ),
         variant_cols, ns_cols,
     )
-    data_cols = [
-        c
-        for c in df.columns
-        if c not in (_FP, _POS)
-        and not c.startswith(_PHYS)
-        and not (lineage and c in ("_row_id", _SEQ))
-    ]
+    data_cols = _dml_data_cols(df, lineage)
     if assignments:
         bad = sorted(set(assignments) - set(data_cols))
         if bad:
             raise ValueError(f"update_where: unknown columns in SET: {bad}")
-    hits = (
-        df.filter(condition).groupBy(F.col(_FP).alias("fp")).count().collect()
-    )
-    n = sum(r["count"] for r in hits)
-    if n == 0:
-        return {"matched": 0, "snapshot_id": None, "delete_files": [],
-                "files_scanned": len(paths), "files_total": n_live,
-                "files_rewritten": 0}
-    affected_keys = {_key(r["fp"]) for r in hits}
-    affected = [p for p in paths if _key(p) in affected_keys]
 
-    # output sizing from manifest record counts — no extra count() action
-    stats = im.live_data_stats(root, snap)
-    recs = [
-        (stats.get(p) or {}).get("records") for p in affected
-    ]
-    total_affected = sum(recs) if all(r is not None for r in recs) else None
-    n_out = None
-    if total_affected is not None:
-        n_out = total_affected - (n if assignments is None else 0)
-
-    shred_affected = [
-        (
-            [p for p in spaths if _key(p) in affected_keys],
-            descs,
-        )
-        for spaths, descs in shred
-    ]
-    shred_affected = [(sp, d) for sp, d in shred_affected if sp]
-    df2 = _decorate_dml_surface(
-        _dml_raw_scan(
-            spark, root, snap, affected, meta_path,
-            variant_cols=variant_cols, ns_cols=ns_cols,
-            shred=shred_affected, extra_footer_cols=extra,
-        ),
-        variant_cols, ns_cols,
-    )
-    cond = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-    out_cols = [
-        _dml_out_col(c, assignments, cond, df2, variant_cols, ns_cols)
-        for c in data_cols
-    ]
-    if lineage:
-        # v3 row lineage (r11): a COW rewrite is a PHYSICAL move for the
-        # unmatched co-located rows and a carried-id update for the
-        # matched ones — every rewritten row materializes its source id
-        # (carry-over rows MUST keep theirs; the spec's whole point).
-        # r12: _last_updated_sequence_number materializes the SOURCE
-        # value for carried rows (their last change predates this
-        # rewrite) and NULL for matched rows — inheriting the new
-        # file's data sequence, i.e. this commit, which DID change them.
-        df2 = _with_source_row_ids(spark, root, snap, df2, with_seq=True)
-        out_cols = out_cols + [F.col("__cf_src_rid").alias("_row_id")]
-        src_seq = F.col("__cf_src_seq")
-        out_cols = out_cols + [
-            (
-                src_seq
-                if assignments is None
-                else F.when(
-                    cond, F.lit(None).cast("bigint")
-                ).otherwise(src_seq)
-            ).alias(_SEQ)
+    def rewrite(affected: list):
+        keys = {im.data_file_suffix(p) for p in affected}
+        shred_affected = [
+            ([p for p in sp if im.data_file_suffix(p) in keys], d)
+            for sp, d in shred
         ]
-    if assignments is None:
-        rewritten = df2.filter(~cond).select(*out_cols)
-    else:
-        rewritten = df2.select(*out_cols)
-    out_dir = os.path.join(
-        root, "data", f"cow-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
+        df2 = _decorate_dml_surface(
+            _dml_raw_scan(
+                spark, root, snap, affected, meta_path,
+                variant_cols=variant_cols, ns_cols=ns_cols,
+                shred=[(sp, d) for sp, d in shred_affected if sp],
+                extra_footer_cols=extra,
+            ),
+            variant_cols, ns_cols,
+        )
+        cond = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
+        out_cols = [
+            _dml_out_col(c, assignments, cond, df2, variant_cols, ns_cols)
+            for c in data_cols
+        ]
+        if lineage:
+            # v3 row lineage (r11): a COW rewrite is a PHYSICAL move for
+            # the unmatched co-located rows and a carried-id update for
+            # the matched ones — every rewritten row materializes its
+            # source id (carry-over rows MUST keep theirs; the spec's
+            # whole point). r12: _last_updated_sequence_number
+            # materializes the SOURCE value for carried rows (their last
+            # change predates this rewrite) and NULL for matched rows —
+            # inheriting the new file's data sequence, i.e. this commit,
+            # which DID change them.
+            df2 = _with_source_row_ids(spark, root, snap, df2, with_seq=True)
+            src_seq = F.col("__cf_src_seq")
+            out_cols += [
+                F.col("__cf_src_rid").alias("_row_id"),
+                (
+                    src_seq
+                    if assignments is None
+                    else F.when(
+                        cond, F.lit(None).cast("bigint")
+                    ).otherwise(src_seq)
+                ).alias(_SEQ),
+            ]
+        if assignments is None:
+            return df2.filter(~cond).select(*out_cols)
+        return df2.select(*out_cols)
+
+    matches = _dml_coords(df.filter(condition)).persist()
+    try:
+        n = matches.count()
+        return _row_delta(
+            spark, root, "cow_dml", matches, n,
+            result={"matched": n, "delete_files": [],
+                    "files_scanned": len(paths), "files_total": n_live},
+            meta_path=meta_path, snap=snap, paths=paths,
+            timestamp_ms=timestamp_ms, rows_per_file=rows_per_file,
+            rebase={"forbid_new_data": True},
+            rewrite=rewrite, n_dropped=n if assignments is None else 0,
+            tag="cow", ns_cols=ns_cols, ref=ref,
+        )
+    finally:
+        matches.unpersist()
+
+
+def _dml_snapshot(root: str, ref: "str | None", op: str):
+    """Pin the metadata version and the snapshot (main, or the head of
+    branch ``ref``) a DML op reads: ``(meta_path, snap)``."""
+    from cloudfloe_spark.sources import iceberg_meta as im
+
+    meta_path = im.latest_metadata_path(root)
+    snap = (
+        _ref_snapshot(root, meta_path, ref, op)
+        if ref is not None
+        else im.resolve_snapshot(root, metadata_path=meta_path)
     )
-    new_files = _write_data_files(
-        spark, root, meta_path, rewritten, n_out, rows_per_file, out_dir,
-        ns_tz=_ns_tz_map(root, meta_path, ns_cols) if ns_cols else None,
-    )
-    snap_id = _commit_with_rebase(
-        root, "cow_dml",
-        lambda mp: commit_row_delta_snapshot(
-            root,
-            new_data_files=new_files,
-            removed_data_files=affected,
-            timestamp_ms=timestamp_ms,
-            expected_metadata_path=mp,
-            parent_ref=ref,
-        ),
-        meta_path,
-        lambda: _rebase_ok(
-            root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-            forbid_new_data=True,
-        ),
-    )
-    return {"matched": n, "snapshot_id": snap_id, "delete_files": [],
-            "files_scanned": len(paths), "files_total": n_live,
-            "files_rewritten": len(affected)}
+    return meta_path, snap
 
 
 @_reruns_on_conflict("delete_where")
@@ -2469,25 +2634,24 @@ def delete_where(
     Mechanics: scan the live data files with Spark, keep rows matching
     ``condition`` (a SQL boolean expression over the table's columns),
     project their spec coordinates ``(_metadata.file_path,
-    _metadata.row_index)``, and write them as sorted position-delete
-    parquet files — ``repartitionByRange`` + ``sortWithinPartitions`` on
-    (file_path, pos) keeps every delete file sorted as the spec requires
-    while the WRITE stays distributed (one shuffle sized by the match
-    count, never by table size; files sized by ``rows_per_delete_file``).
-    The commit (:func:`iceberg_fixture.commit_delete_snapshot`) carries
-    the current live set at its ORIGINAL sequence numbers and adds the
-    delete files at the next sequence, so equality-delete ordering is
-    undisturbed and time travel to the pre-delete snapshot still shows
-    every row. Re-deleting an already-deleted row is a harmless duplicate
-    (the reader's anti-join is idempotent).
+    _metadata.row_index)``, and hand them to the row-delta core
+    (:func:`_row_delta`), which writes them as sorted position-delete
+    parquet files (deletion vectors on v3; files sized by
+    ``rows_per_delete_file``). The commit
+    (:func:`iceberg_fixture.commit_delete_snapshot`) carries the current
+    live set at its ORIGINAL sequence numbers and adds the delete files
+    at the next sequence, so equality-delete ordering is undisturbed and
+    time travel to the pre-delete snapshot still shows every row.
+    Re-deleting an already-deleted row is a harmless duplicate (the
+    reader's anti-join is idempotent).
 
     Renamed tables work (r7, lifting the r6 refusal): the scan resolves
     write-time column names per file group exactly as the read path does,
     so ``condition`` is always written in CURRENT names.
 
     ``mode="copy-on-write"`` (r8) rewrites the affected data files
-    instead of committing delete files — see :func:`_cow_dml` for the
-    trade-off and scale shape.
+    instead of committing delete files — see :func:`_row_delta` for
+    the trade-off and :func:`_cow_dml` for the scale shape.
 
     v3 variant / ns-timestamp tables (r13, VERDICT r12 #1/#5): the
     condition evaluates on the engine's read surface (canonical-JSON
@@ -2500,30 +2664,17 @@ def delete_where(
     delete never rewrites the shredded layout), and COW normalizes the
     affected groups through the reassemble→re-encode pass.
     """
-    from pyspark.sql import functions as F
-
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import commit_delete_snapshot
 
     if mode not in ("merge-on-read", "copy-on-write"):
         raise ValueError(f"delete_where: unknown mode {mode!r}")
-    meta_path = im.latest_metadata_path(root)
-    snap = (
-        _ref_snapshot(root, meta_path, ref, "delete_where")
-        if ref is not None
-        else im.resolve_snapshot(root, metadata_path=meta_path)
-    )
+    meta_path, snap = _dml_snapshot(root, ref, "delete_where")
     paths = im.live_data_paths(root, snap)
     n_live = len(paths)
     paths = _prune_dml_scan(root, meta_path, snap, condition, paths)
     if not paths:
-        return {
-            "matched": 0,
-            "snapshot_id": None,
-            "delete_files": [],
-            "files_scanned": 0,
-            "files_total": n_live,
-        }
+        return {"matched": 0, "snapshot_id": None, "delete_files": [],
+                "files_scanned": 0, "files_total": n_live}
     if mode == "copy-on-write":
         return _cow_dml(
             spark, root, condition, None,
@@ -2532,7 +2683,6 @@ def delete_where(
             meta_path=meta_path, snap=snap, paths=paths, n_live=n_live,
             ref=ref,
         )
-    fv = int(im.load_metadata(root, meta_path).get("format-version") or 1)
 
     # v3 variant / ns tables (r13): a MOR DELETE never touches the
     # variant bytes or ns longs — the scan reads the physical layouts,
@@ -2573,13 +2723,7 @@ def delete_where(
             hist=shist, fills=sfills,
         )
         match_parts.append(_decorate_dml_surface(g, [], ns_cols))
-    coords = [
-        p.filter(condition).select(
-            F.col(_FP).alias("file_path"),
-            F.col(_POS).alias("pos"),
-        )
-        for p in match_parts
-    ]
+    coords = [_dml_coords(p.filter(condition)) for p in match_parts]
     matches = coords[0]
     for c_ in coords[1:]:
         matches = matches.unionByName(c_)
@@ -2590,85 +2734,19 @@ def delete_where(
     matches = matches.persist()
     try:
         n = matches.count()
-        if n == 0:
-            return {"matched": 0, "snapshot_id": None, "delete_files": [],
-                    "files_scanned": len(paths), "files_total": n_live}
-
-        if fv >= 3:
-            # v3 write path (r10): the spec forbids new position-delete
-            # FILES — matched positions commit as per-file DELETION
-            # VECTORS instead (executor-side roaring build, driver
-            # collects only compressed blobs). Branch-targeted deletes
-            # (r14, VERDICT r13 #3) stage the DVs against the branch
-            # head — write-audit-publish on v3 tables.
-            from cloudfloe_spark.sources.iceberg_fixture import (
-                commit_deletion_vector_snapshot,
-            )
-
-            dvs = _collect_deletion_vectors(spark, matches)
-            snap_id = _commit_with_rebase(
-                root, "delete_where",
-                lambda mp: commit_deletion_vector_snapshot(
-                    root, dvs, timestamp_ms=timestamp_ms,
-                    expected_metadata_path=mp, parent_ref=ref,
-                ),
-                meta_path,
-                lambda: _rebase_ok(
-                    root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-                    forbid_new_data=True,
-                ),
-            )
-            return {
-                "matched": n,
-                "snapshot_id": snap_id,
-                "delete_files": [],
-                "deletion_vectors": len(dvs),
-                "files_scanned": len(paths),
-                "files_total": n_live,
-            }
-
-        out_dir = os.path.join(
-            root, "data", f"deletes-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
-        )
-        n_files = max(1, -(-n // rows_per_delete_file))
-        (
-            matches.repartitionByRange(
-                n_files, F.col("file_path"), F.col("pos")
-            )
-            .sortWithinPartitions("file_path", "pos")
-            .write.mode("errorifexists")
-            .parquet(out_dir)
+        # serializable DML (r10): rebase only when nothing landed in
+        # between; a concurrent append/delete re-runs the scan so the
+        # condition sees it. No match → no write, no commit.
+        return _row_delta(
+            spark, root, "delete_where", matches, n,
+            result={"matched": n, "delete_files": [],
+                    "files_scanned": len(paths), "files_total": n_live},
+            meta_path=meta_path, snap=snap, paths=paths,
+            timestamp_ms=timestamp_ms, rows_per_file=rows_per_delete_file,
+            rebase={"forbid_new_data": True}, ref=ref,
         )
     finally:
         matches.unpersist()
-    import pyarrow.parquet as pq
-
-    delete_files = []
-    for f in sorted(globmod.glob(os.path.join(out_dir, "*.parquet"))):
-        cnt = pq.ParquetFile(f).metadata.num_rows
-        if cnt:
-            delete_files.append((f, cnt))
-    # serializable DML (r10): rebase only when nothing landed in between;
-    # a concurrent append/delete re-runs the scan so the condition sees it
-    snap_id = _commit_with_rebase(
-        root, "delete_where",
-        lambda mp: commit_delete_snapshot(
-            root, delete_files, timestamp_ms=timestamp_ms,
-            expected_metadata_path=mp, parent_ref=ref,
-        ),
-        meta_path,
-        lambda: _rebase_ok(
-            root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-            forbid_new_data=True,
-        ),
-    )
-    return {
-        "matched": n,
-        "snapshot_id": snap_id,
-        "delete_files": [p for p, _ in delete_files],
-        "files_scanned": len(paths),
-        "files_total": n_live,
-    }
 
 
 @_reruns_on_conflict("update_where")
@@ -2693,12 +2771,12 @@ def update_where(
     ``assignments`` maps column name → SQL expression evaluated against
     the OLD row (standard UPDATE semantics: all expressions see the
     pre-update values). Unassigned columns pass through. Both the delete
-    and the rewritten-row writes are distributed, sized by the match
-    count, never by table size. Renamed tables work (r7): write-time
-    names resolve per file group, like delete_where.
+    and the rewritten-row writes (:func:`_row_delta`) are distributed,
+    sized by the match count, never by table size. Renamed tables work
+    (r7): write-time names resolve per file group, like delete_where.
 
     ``mode="copy-on-write"`` (r8) rewrites the affected data files in
-    place of the delete+re-append row delta — see :func:`_cow_dml`.
+    place of the delete+re-append row delta — see :func:`_row_delta`.
 
     v3 variant / ns-timestamp tables (r13): assignments and the
     condition evaluate on the engine's read surface; a SET on a
@@ -2715,18 +2793,10 @@ def update_where(
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        commit_row_delta_snapshot,
-    )
 
     if mode not in ("merge-on-read", "copy-on-write"):
         raise ValueError(f"update_where: unknown mode {mode!r}")
-    meta_path = im.latest_metadata_path(root)
-    snap = (
-        _ref_snapshot(root, meta_path, ref, "update_where")
-        if ref is not None
-        else im.resolve_snapshot(root, metadata_path=meta_path)
-    )
+    meta_path, snap = _dml_snapshot(root, ref, "update_where")
     paths = im.live_data_paths(root, snap)
     n_live = len(paths)
     paths = _prune_dml_scan(root, meta_path, snap, condition, paths)
@@ -2741,9 +2811,9 @@ def update_where(
             meta_path=meta_path, snap=snap, paths=paths, n_live=n_live,
             ref=ref,
         )
-    meta_now = im.load_metadata(root, meta_path)
-    fv = int(meta_now.get("format-version") or 1)
-    lineage = meta_now.get("next-row-id") is not None
+    lineage = (
+        im.load_metadata(root, meta_path).get("next-row-id") is not None
+    )
 
     # SHREDDED files (r14): the rewrite needs a physical passthrough, so
     # shred groups normalize to the unshredded struct in-flight — the
@@ -2760,13 +2830,7 @@ def update_where(
         ),
         variant_cols, ns_cols,
     )
-    data_cols = [
-        c
-        for c in df.columns
-        if c not in (_FP, _POS)
-        and not c.startswith(_PHYS)
-        and not (lineage and c == "_row_id")
-    ]
+    data_cols = _dml_data_cols(df, lineage)
     bad = sorted(set(assignments) - set(data_cols))
     if bad:
         raise ValueError(f"update_where: unknown columns in SET: {bad}")
@@ -2774,43 +2838,13 @@ def update_where(
     # the matching files total, cached state sized by the match count
     matches = df.filter(condition).persist()
     try:
-        deletes = matches.select(
-            F.col(_FP).alias("file_path"),
-            F.col(_POS).alias("pos"),
-        )
+        deletes = _dml_coords(matches)
         n = deletes.count()
         if n == 0:
             return {"matched": 0, "snapshot_id": None,
                     "files_scanned": len(paths), "files_total": n_live}
-
-        dvs = None
-        if fv >= 3:
-            # v3 row delta (r10): retractions commit as DELETION VECTORS
-            # (v3 forbids new position-delete files) and the rewritten
-            # rows land at the same commit's higher sequence. On a
-            # branch (r14) the whole delta stages against the ref head.
-            dvs = _collect_deletion_vectors(spark, deletes)
-        else:
-            import pyarrow.parquet as pq
-
-            del_dir = os.path.join(
-                root, "data",
-                f"deletes-{timestamp_ms}-{_uuid.uuid4().hex[:8]}",
-            )
-            n_files = max(1, -(-n // rows_per_delete_file))
-            (
-                deletes.repartitionByRange(
-                    n_files, F.col("file_path"), F.col("pos")
-                )
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("errorifexists")
-                .parquet(del_dir)
-            )
         # rewritten rows: assignments see the OLD values (standard
         # UPDATE); the original column order/schema is preserved
-        upd_dir = os.path.join(
-            root, "data", f"update-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
-        )
         out_cols = [
             _dml_out_col(c, assignments, None, df, variant_cols, ns_cols)
             for c in data_cols
@@ -2824,63 +2858,18 @@ def update_where(
             # rows still work: null falls back to first_row_id + pos)
             src = _with_source_row_ids(spark, root, snap, matches)
             out_cols.append(F.col("__cf_src_rid").alias("_row_id"))
-        rewritten = src.select(*out_cols)
-        new_files = _write_data_files(
-            spark, root, meta_path, rewritten, n, rows_per_delete_file,
-            upd_dir,
-            ns_tz=_ns_tz_map(root, meta_path, ns_cols) if ns_cols else None,
+        return _row_delta(
+            spark, root, "update_where", deletes, n,
+            result={"matched": n, "files_scanned": len(paths),
+                    "files_total": n_live},
+            meta_path=meta_path, snap=snap, paths=paths,
+            timestamp_ms=timestamp_ms, rows_per_file=rows_per_delete_file,
+            rebase={"forbid_new_data": True},
+            emitted=src.select(*out_cols), n_emitted=n, tag="update",
+            ns_cols=ns_cols, ref=ref,
         )
     finally:
         matches.unpersist()
-
-    if dvs is not None:
-        from cloudfloe_spark.sources.iceberg_fixture import (
-            commit_deletion_vector_snapshot,
-        )
-
-        snap_id = _commit_with_rebase(
-            root, "update_where",
-            lambda mp: commit_deletion_vector_snapshot(
-                root, dvs, new_data_files=new_files,
-                timestamp_ms=timestamp_ms, expected_metadata_path=mp,
-                parent_ref=ref,
-            ),
-            meta_path,
-            lambda: _rebase_ok(
-                root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-                forbid_new_data=True,
-            ),
-        )
-        return {"matched": n, "snapshot_id": snap_id,
-                "deletion_vectors": len(dvs),
-                "files_scanned": len(paths), "files_total": n_live}
-
-    def _parquets(d):
-        out = []
-        for f in sorted(globmod.glob(os.path.join(d, "*.parquet"))):
-            cnt = pq.ParquetFile(f).metadata.num_rows
-            if cnt:
-                out.append((f, cnt))
-        return out
-
-    snap_id = _commit_with_rebase(
-        root, "update_where",
-        lambda mp: commit_row_delta_snapshot(
-            root,
-            new_data_files=new_files,
-            delete_files=_parquets(del_dir),
-            timestamp_ms=timestamp_ms,
-            expected_metadata_path=mp,
-            parent_ref=ref,
-        ),
-        meta_path,
-        lambda: _rebase_ok(
-            root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-            forbid_new_data=True,
-        ),
-    )
-    return {"matched": n, "snapshot_id": snap_id,
-            "files_scanned": len(paths), "files_total": n_live}
 
 
 @_reruns_on_conflict("apply_changelog")
@@ -2910,8 +2899,9 @@ def apply_changelog(
 
     Scale shape: the retraction pass is one MOR scan of the target
     semi-joined against the BROADCAST (changelog-sized) retraction keys,
-    the delete/insert writes are distributed and sized by the changelog,
-    and the commit is metadata-only — never a table rewrite.
+    the delete/insert writes (:func:`_row_delta`) are distributed and
+    sized by the changelog, and the commit is metadata-only — never a
+    table rewrite.
 
     ``changelog_id`` makes the apply IDEMPOTENT under retries (the same
     construction the streaming sink uses for exactly-once): the id is
@@ -2924,9 +2914,6 @@ def apply_changelog(
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        commit_row_delta_snapshot,
-    )
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if "_change_type" not in changes.columns:
@@ -2974,21 +2961,9 @@ def apply_changelog(
         root, meta_path, paths, "apply_changelog", allow_shredded=True
     )
 
-    import pyarrow.parquet as pq
-
-    def _parquets(d):
-        out = []
-        for f in sorted(globmod.glob(os.path.join(d, "*.parquet"))):
-            cnt = pq.ParquetFile(f).metadata.num_rows
-            if cnt:
-                out.append((f, cnt))
-        return out
-
+    matched = None
     try:
         n_retract_keys = retract_keys.count()
-        fv = int(
-            im.load_metadata(root, meta_path).get("format-version") or 1
-        )
         # NULL keys never equi-match, so a null-keyed retraction would be
         # SILENTLY skipped — reject instead (Iceberg identifier fields are
         # required non-null; a changelog keyed on a nullable column is a
@@ -3002,8 +2977,6 @@ def apply_changelog(
                 "apply_changelog: retraction rows carry NULL key values; "
                 "identifier columns must be non-null"
             )
-        delete_files: list = []
-        dvs = None
         n_del = 0
         if n_retract_keys and paths:
             # Prune the retraction scan by the retraction keys' [min, max]
@@ -3051,125 +3024,44 @@ def apply_changelog(
                 raise ValueError(
                     f"apply_changelog: key column(s) {bad} not in target"
                 )
-            matched = (
+            matched = _dml_coords(
                 tdf.join(F.broadcast(retract_keys), keys, "left_semi")
-                .select(
-                    F.col(_FP).alias("file_path"), F.col(_POS).alias("pos")
-                )
-                .persist()
+            ).persist()
+            n_del = matched.count()
+
+        if variant_cols or ns_cols:
+            # v3 (r13): insertions arrive on the SURFACE (variant as JSON
+            # text, ns as µs timestamps) and encode to the physical forms
+            inserts = inserts.select(
+                *[
+                    _write_form(c, F.col(c), variant_cols, ns_cols).alias(c)
+                    for c in inserts.columns
+                ]
             )
-            try:
-                n_del = matched.count()
-                if n_del and fv >= 3:
-                    # v3 (r10): retractions commit as DELETION VECTORS
-                    # in the same atomic commit as the insertions
-                    dvs = _collect_deletion_vectors(spark, matched)
-                elif n_del:
-                    del_dir = os.path.join(
-                        root,
-                        "data",
-                        f"deletes-{timestamp_ms}-{_uuid.uuid4().hex[:8]}",
-                    )
-                    n_files = max(1, -(-n_del // rows_per_delete_file))
-                    (
-                        matched.repartitionByRange(
-                            n_files, F.col("file_path"), F.col("pos")
-                        )
-                        .sortWithinPartitions("file_path", "pos")
-                        .write.mode("errorifexists")
-                        .parquet(del_dir)
-                    )
-                    delete_files = _parquets(del_dir)
-            finally:
-                matched.unpersist()
-    finally:
-        retract_keys.unpersist()
-
-    ins_dir = os.path.join(
-        root, "data", f"changelog-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
-    )
-    if variant_cols or ns_cols:
-        # v3 (r13): insertions arrive on the SURFACE (variant as JSON
-        # text, ns as µs timestamps) and encode to the physical forms
-        from cloudfloe_spark.functions.variant import (
-            json_variant_encode_udf,
-        )
-
-        ins_cols = []
-        for c in inserts.columns:
-            if c in variant_cols:
-                ins_cols.append(
-                    json_variant_encode_udf()(
-                        F.col(c).cast("string")
-                    ).alias(c)
-                )
-            elif c in ns_cols:
-                ins_cols.append(
-                    (
-                        F.unix_micros(F.col(c).cast("timestamp"))
-                        * F.lit(1000).cast("bigint")
-                    ).alias(c)
-                )
-            else:
-                ins_cols.append(F.col(c))
-        inserts = inserts.select(*ins_cols)
-    new_files = _write_data_files(
-        spark, root, meta_path, inserts, inserts.count(),
-        rows_per_delete_file, ins_dir,
-        ns_tz=_ns_tz_map(root, meta_path, ns_cols) if ns_cols else None,
-    )
-    n_ins = sum(e[1] for e in new_files)
-
-    if not delete_files and not new_files and not dvs:
-        return {"retracted": 0, "inserted": 0, "snapshot_id": None}
-    if dvs:
-        from cloudfloe_spark.sources.iceberg_fixture import (
-            commit_deletion_vector_snapshot,
-        )
-
-        snap_id = _commit_with_rebase(
-            root, "apply_changelog",
-            lambda mp: commit_deletion_vector_snapshot(
-                root, dvs, new_data_files=new_files,
-                timestamp_ms=timestamp_ms, expected_metadata_path=mp,
-                summary_extra=(
-                    {"changelog-id": changelog_id}
-                    if changelog_id is not None
-                    else None
-                ),
-            ),
-            meta_path,
-            lambda: _rebase_ok(root, scanned_paths=paths, pinned_snap=snap),
-        )
-        return {"retracted": n_del, "inserted": n_ins,
-                "snapshot_id": snap_id, "deletion_vectors": len(dvs)}
-    # snapshot isolation (r10): a changelog apply replicates a FIXED
-    # delta, so concurrent appends coexist — only a lost retraction
-    # (scanned file gone, or a foreign delete landing in between) forces
-    # the re-run
-    snap_id = _commit_with_rebase(
-        root, "apply_changelog",
-        lambda mp: commit_row_delta_snapshot(
-            root,
-            new_data_files=new_files,
-            delete_files=delete_files,
-            timestamp_ms=timestamp_ms,
-            expected_metadata_path=mp,
+        n_ins = inserts.count()
+        # snapshot isolation (r10): a changelog apply replicates a FIXED
+        # delta, so concurrent appends coexist — only a lost retraction
+        # (scanned file gone, or a foreign delete landing in between)
+        # forces the re-run; an insert-only apply always rebases
+        return _row_delta(
+            spark, root, "apply_changelog", matched, n_del,
+            result={"retracted": n_del, "inserted": n_ins},
+            meta_path=meta_path, snap=snap,
+            paths=paths if n_del else [],
+            timestamp_ms=timestamp_ms, rows_per_file=rows_per_delete_file,
+            rebase={"forbid_new_deletes": bool(n_del)},
+            emitted=inserts, n_emitted=n_ins, tag="changelog",
+            ns_cols=ns_cols,
             summary_extra=(
                 {"changelog-id": changelog_id}
                 if changelog_id is not None
                 else None
             ),
-        ),
-        meta_path,
-        lambda: _rebase_ok(
-            root,
-            scanned_paths=(paths if delete_files else []),
-            pinned_snap=snap,
-            forbid_new_deletes=bool(delete_files),
-        ),
-    )
-    return {"retracted": n_del, "inserted": n_ins, "snapshot_id": snap_id}
+        )
+    finally:
+        if matched is not None:
+            matched.unpersist()
+        retract_keys.unpersist()
 
 
 class MergeCardinalityError(ValueError):
@@ -3217,7 +3109,8 @@ def merge_into(
     ``mode="copy-on-write"`` (r8): matched rows' files are rewritten
     (match applied via one left join against the source) and committed
     as removed + replacements together with the unmatched-source
-    inserts — no delete files, same trade as :func:`_cow_dml`.
+    inserts — no delete files, the same :func:`_row_delta` path as
+    :func:`_cow_dml`.
 
     ``when_not_matched_by_source`` (r9 — Spark/Iceberg MERGE's ``WHEN
     NOT MATCHED BY SOURCE`` clause, the full-table-sync idiom): target
@@ -3240,21 +3133,12 @@ def merge_into(
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
-    from cloudfloe_spark.sources.iceberg_fixture import (
-        commit_row_delta_snapshot,
-    )
 
     keys = [on] if isinstance(on, str) else list(on)
     when_matched = when_matched or {}
     if mode not in ("merge-on-read", "copy-on-write"):
         raise ValueError(f"merge_into: unknown mode {mode!r}")
-    meta_path = im.latest_metadata_path(root)
-    fv = int(im.load_metadata(root, meta_path).get("format-version") or 1)
-    snap = (
-        _ref_snapshot(root, meta_path, ref, "merge_into")
-        if ref is not None
-        else im.resolve_snapshot(root, metadata_path=meta_path)
-    )
+    meta_path, snap = _dml_snapshot(root, ref, "merge_into")
     paths = im.live_data_paths(root, snap)
     if not paths:
         raise ValueError("merge_into: target table has no live data files")
@@ -3278,35 +3162,14 @@ def merge_into(
         ),
         variant_cols, ns_cols,
     )
-    tcols = [
-        c
-        for c in tdf.columns
-        if c not in (_FP, _POS)
-        and not c.startswith(_PHYS)
-        and not (lineage and c in ("_row_id", _SEQ))
-    ]
-
-    def _enc_json(col):
-        from cloudfloe_spark.functions.variant import (
-            json_variant_encode_udf,
-        )
-
-        return json_variant_encode_udf()(col.cast("string"))
-
-    def _ns_long(col):
-        return (
-            F.unix_micros(col.cast("timestamp"))
-            * F.lit(1000).cast("bigint")
-        )
+    tcols = _dml_data_cols(tdf, lineage)
 
     def _v3_write(c, col):
-        """Physical write form of an ASSIGNED/INSERTED value for column
-        ``c`` (surface-typed Column ``col``)."""
-        if c in variant_cols:
-            return _enc_json(col)
-        if c in ns_cols:
-            return _ns_long(col)
-        return col.cast(tdf.schema[c].dataType)
+        # physical write form of an ASSIGNED/INSERTED value
+        return _write_form(
+            c, col, variant_cols, ns_cols, tdf.schema[c].dataType
+        )
+
     missing = sorted(set(tcols) - set(source.columns))
     if insert_unmatched and missing:
         raise ValueError(
@@ -3344,6 +3207,12 @@ def merge_into(
             "when_not_matched_by_source"
         )
 
+    def _nms_cond():
+        return F.coalesce(
+            F.expr(not_matched_by_source_condition).cast("boolean"),
+            F.lit(False),
+        )
+
     if lineage:
         # v3 row lineage (r11): matched/reassigned rewrites carry their
         # source row ids forward (materialized per-row; inserts get
@@ -3361,6 +3230,12 @@ def merge_into(
     for k in keys:
         eq = F.col(f"t.{k}") == F.col(f"s.{k}")
         cond = eq if cond is None else (cond & eq)
+
+    def _coords(df):
+        return df.select(
+            F.col("t.__fp").alias("file_path"),
+            F.col("t.__pos").alias("pos"),
+        )
 
     # persist: the matched set feeds the cardinality check, the match
     # count, the rewritten-row write AND the delete-file write — without
@@ -3390,35 +3265,20 @@ def merge_into(
             # non-matching row count, never re-scanning the target
             nms = t.join(s, cond, "left_anti")
             if not_matched_by_source_condition is not None:
-                nms = nms.filter(
-                    F.coalesce(
-                        F.expr(not_matched_by_source_condition).cast(
-                            "boolean"
-                        ),
-                        F.lit(False),
-                    )
-                )
+                nms = nms.filter(_nms_cond())
             nms = nms.persist()
             n_nms = nms.count()
 
         rid_out = (
             [F.col("t.__rid").alias("_row_id")] if lineage else []
         )
+
         def _t_col(c):
             # the PHYSICAL form of an untouched t-side column
             if c in _v3:
                 return F.col(f"t.{_PHYS}{c}").alias(c)
             return F.col(f"t.{c}").alias(c)
 
-        rewritten = matched.select(
-            *[
-                _v3_write(c, F.expr(when_matched[c])).alias(c)
-                if c in when_matched
-                else _t_col(c)
-                for c in tcols
-            ],
-            *rid_out,
-        )
         inserts = (
             s.join(t, cond, "left_anti").select(
                 *[
@@ -3434,61 +3294,44 @@ def merge_into(
             if insert_unmatched
             else None
         )
-        if nms is not None and nms_assign is not None and n_nms:
-            rewritten = rewritten.unionByName(
-                nms.select(
-                    *[
-                        _v3_write(c, F.expr(nms_assign[c])).alias(c)
-                        if c in nms_assign
-                        else _t_col(c)
-                        for c in tcols
-                    ],
-                    *rid_out,
-                )
-            )
         n_inserted = inserts.count() if inserts is not None else 0
         if n_matched == 0 and n_inserted == 0 and n_nms == 0:
             return {"matched": 0, "inserted": 0, "snapshot_id": None,
                     "not_matched_by_source": 0}
 
-        if mode == "copy-on-write":
-            # rewrite the matched rows' files (match re-applied via one
-            # left join against the source inside those files only) and
-            # commit them as removed + replacements with the inserts —
-            # no delete files, write amplification = the affected files
-            def _key(p: str) -> str:
-                return im.data_file_suffix(p)
+        retract = _coords(matched)
+        if nms is not None and n_nms:
+            retract = retract.unionByName(_coords(nms))
+        nms_dropped = (
+            n_nms
+            if when_not_matched_by_source is not None and nms_assign is None
+            else 0
+        )
+        core = dict(
+            result={"matched": n_matched, "inserted": n_inserted,
+                    "not_matched_by_source": n_nms},
+            meta_path=meta_path, snap=snap, paths=paths,
+            timestamp_ms=timestamp_ms, rows_per_file=rows_per_delete_file,
+            rebase={"forbid_new_data": True},
+            ns_cols=ns_cols, ref=ref, summary_extra=summary_extra,
+        )
 
-            aff_keys = {
-                _key(r[0])
-                for r in matched.select(F.col("t.__fp")).distinct().collect()
-            }
-            if nms is not None and n_nms:
-                aff_keys |= {
-                    _key(r[0])
-                    for r in nms.select(F.col("t.__fp")).distinct().collect()
-                }
-            affected = [p for p in paths if _key(p) in aff_keys]
-            out_parts = []
-            n_aff = 0
-            if affected:
-                stats = im.live_data_stats(root, snap)
-                recs = [
-                    (stats.get(p) or {}).get("records") for p in affected
-                ]
-                n_aff = (
-                    sum(recs) if all(r is not None for r in recs) else None
-                )
+        if mode == "copy-on-write":
+            # rewrite the affected files with the match re-applied via
+            # one left join against the source inside those files only;
+            # the core commits them as removed + replacements with the
+            # inserts — no delete files
+            def rewrite(affected: list):
+                aff = {im.data_file_suffix(p) for p in affected}
                 shred_aff = [
-                    ([p for p in sp if _key(p) in aff_keys], d)
+                    ([p for p in sp if im.data_file_suffix(p) in aff], d)
                     for sp, d in shred
                 ]
-                shred_aff = [(sp, d) for sp, d in shred_aff if sp]
                 df2 = _decorate_dml_surface(
                     _dml_raw_scan(
                         spark, root, snap, affected, meta_path,
                         variant_cols=variant_cols, ns_cols=ns_cols,
-                        shred=shred_aff,
+                        shred=[(sp, d) for sp, d in shred_aff if sp],
                         extra_footer_cols=["_row_id", _SEQ]
                         if lineage
                         else None,
@@ -3506,23 +3349,15 @@ def merge_into(
                     ).drop("_row_id", _SEQ)
                 df2 = df2.drop(_FP, _POS).alias("t")
                 sm = source.withColumn("__cf_sm", F.lit(True)).alias("s")
-                cond2 = None
-                for k in keys:
-                    eq = F.col(f"t.{k}") == F.col(f"s.{k}")
-                    cond2 = eq if cond2 is None else (cond2 & eq)
-                joined = df2.join(sm, cond2, "left")
+                joined = df2.join(sm, cond, "left")
                 nms_pred = None
                 if when_not_matched_by_source is not None:
                     nms_pred = F.col("__cf_sm").isNull()
                     if not_matched_by_source_condition is not None:
-                        nms_pred = nms_pred & F.coalesce(
-                            F.expr(
-                                not_matched_by_source_condition
-                            ).cast("boolean"),
-                            F.lit(False),
-                        )
+                        nms_pred = nms_pred & _nms_cond()
                 if nms_pred is not None and nms_assign is None:
                     joined = joined.filter(~nms_pred)
+                reassigned = nms_pred is not None and nms_assign is not None
 
                 def _out_col(c):
                     e = (
@@ -3530,8 +3365,7 @@ def merge_into(
                         if c in _v3
                         else F.col(f"t.{c}")
                     )
-                    if nms_pred is not None and nms_assign is not None \
-                            and c in nms_assign:
+                    if reassigned and c in nms_assign:
                         e = F.when(
                             nms_pred,
                             _v3_write(c, F.expr(nms_assign[c])),
@@ -3554,7 +3388,7 @@ def merge_into(
                     changed = None
                     if when_matched:
                         changed = F.col("__cf_sm").isNotNull()
-                    if nms_pred is not None and nms_assign is not None:
+                    if reassigned:
                         changed = (
                             nms_pred
                             if changed is None
@@ -3565,169 +3399,54 @@ def merge_into(
                             changed, F.lit(None).cast("bigint")
                         ).otherwise(seq_e)
                     lineage_out.append(seq_e.alias(_SEQ))
-                out_parts.append(
-                    joined.select(
-                        *[_out_col(c) for c in tcols], *lineage_out
-                    )
+                return joined.select(
+                    *[_out_col(c) for c in tcols], *lineage_out
                 )
-            if inserts is not None and n_inserted:
-                ins = inserts
-                if lineage:
-                    # fresh rows: inherit this commit's sequence
-                    ins = ins.withColumn(
-                        _SEQ, F.lit(None).cast("bigint")
-                    )
-                out_parts.append(ins)
-            out = out_parts[0]
-            for p_ in out_parts[1:]:
-                out = out.unionByName(p_)
-            merge_dir = os.path.join(
-                root, "data",
-                f"cow-merge-{timestamp_ms}-{_uuid.uuid4().hex[:8]}",
-            )
-            n_rows_out = None
-            if n_aff is not None:
-                n_rows_out = n_aff + n_inserted - (
-                    n_nms
-                    if (when_not_matched_by_source is not None
-                        and nms_assign is None)
-                    else 0
-                )
-            new_files = _write_data_files(
-                spark, root, meta_path, out, n_rows_out,
-                rows_per_delete_file, merge_dir,
-                ns_tz=_ns_tz_map(root, meta_path, ns_cols)
-                if ns_cols else None,
-            )
-            snap_id = _commit_with_rebase(
-                root, "merge_into",
-                lambda mp: commit_row_delta_snapshot(
-                    root,
-                    new_data_files=new_files,
-                    removed_data_files=affected,
-                    timestamp_ms=timestamp_ms,
-                    expected_metadata_path=mp,
-                    summary_extra=summary_extra,
-                    parent_ref=ref,
-                ),
-                meta_path,
-                lambda: _rebase_ok(
-                    root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-                    forbid_new_data=True,
-                ),
-            )
-            return {
-                "matched": n_matched,
-                "inserted": n_inserted,
-                "not_matched_by_source": n_nms,
-                "snapshot_id": snap_id,
-                "files_rewritten": len(affected),
-            }
 
-        import pyarrow.parquet as pq
-
-        def _parquets(d):
-            out = []
-            for f in sorted(globmod.glob(os.path.join(d, "*.parquet"))):
-                cnt = pq.ParquetFile(f).metadata.num_rows
-                if cnt:
-                    out.append((f, cnt))
-            return out
-
-        delete_files: list[tuple[str, int]] = []
-        dvs = None
-        n_del = n_matched + n_nms
-        if n_del:
-            positions = matched.select(
-                F.col("t.__fp").alias("file_path"),
-                F.col("t.__pos").alias("pos"),
+            ins = inserts
+            if ins is not None and lineage:
+                # fresh rows: inherit this commit's sequence
+                ins = ins.withColumn(_SEQ, F.lit(None).cast("bigint"))
+            return _row_delta(
+                spark, root, "merge_into", retract, n_matched + n_nms,
+                emitted=ins, n_emitted=n_inserted, tag="cow-merge",
+                rewrite=rewrite, n_dropped=nms_dropped, **core,
             )
-            if nms is not None and n_nms:
-                positions = positions.unionByName(
-                    nms.select(
-                        F.col("t.__fp").alias("file_path"),
-                        F.col("t.__pos").alias("pos"),
-                    )
-                )
-            if fv >= 3:
-                # v3 (r10): retractions commit as DELETION VECTORS in the
-                # same atomic commit as the rewritten/inserted rows
-                dvs = _collect_deletion_vectors(spark, positions)
-            else:
-                del_dir = os.path.join(
-                    root, "data",
-                    f"deletes-{timestamp_ms}-{_uuid.uuid4().hex[:8]}",
-                )
-                n_files = max(1, -(-n_del // rows_per_delete_file))
-                (
-                    positions
-                    .repartitionByRange(
-                        n_files, F.col("file_path"), F.col("pos")
-                    )
-                    .sortWithinPartitions("file_path", "pos")
-                    .write.mode("errorifexists")
-                    .parquet(del_dir)
-                )
-                delete_files = _parquets(del_dir)
 
+        rewritten = matched.select(
+            *[
+                _v3_write(c, F.expr(when_matched[c])).alias(c)
+                if c in when_matched
+                else _t_col(c)
+                for c in tcols
+            ],
+            *rid_out,
+        )
+        if nms is not None and nms_assign is not None and n_nms:
+            rewritten = rewritten.unionByName(
+                nms.select(
+                    *[
+                        _v3_write(c, F.expr(nms_assign[c])).alias(c)
+                        if c in nms_assign
+                        else _t_col(c)
+                        for c in tcols
+                    ],
+                    *rid_out,
+                )
+            )
         out = rewritten if inserts is None else rewritten.unionByName(inserts)
-        merge_dir = os.path.join(
-            root, "data", f"merge-{timestamp_ms}-{_uuid.uuid4().hex[:8]}"
-        )
-        n_rewrite = n_matched + n_inserted + (
-            n_nms if nms_assign is not None else 0
-        )
-        new_files = _write_data_files(
-            spark, root, meta_path, out, n_rewrite,
-            rows_per_delete_file, merge_dir,
-            ns_tz=_ns_tz_map(root, meta_path, ns_cols)
-            if ns_cols else None,
+        return _row_delta(
+            spark, root, "merge_into", retract, n_matched + n_nms,
+            emitted=out,
+            n_emitted=n_matched + n_inserted + (
+                n_nms if nms_assign is not None else 0
+            ),
+            tag="merge", **core,
         )
     finally:
         matched.unpersist()
         if nms is not None:
             nms.unpersist()
-
-    if dvs is not None:
-        from cloudfloe_spark.sources.iceberg_fixture import (
-            commit_deletion_vector_snapshot,
-        )
-
-        snap_id = _commit_with_rebase(
-            root, "merge_into",
-            lambda mp: commit_deletion_vector_snapshot(
-                root, dvs, new_data_files=new_files,
-                timestamp_ms=timestamp_ms, expected_metadata_path=mp,
-                summary_extra=summary_extra, parent_ref=ref,
-            ),
-            meta_path,
-            lambda: _rebase_ok(
-                root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-                forbid_new_data=True,
-            ),
-        )
-        return {"matched": n_matched, "inserted": n_inserted,
-                "not_matched_by_source": n_nms, "snapshot_id": snap_id,
-                "deletion_vectors": len(dvs)}
-    snap_id = _commit_with_rebase(
-        root, "merge_into",
-        lambda mp: commit_row_delta_snapshot(
-            root,
-            new_data_files=new_files,
-            delete_files=delete_files,
-            timestamp_ms=timestamp_ms,
-            expected_metadata_path=mp,
-            summary_extra=summary_extra,
-            parent_ref=ref,
-        ),
-        meta_path,
-        lambda: _rebase_ok(
-            root, scanned_paths=paths, pinned_snap=snap, ref=ref,
-            forbid_new_data=True,
-        ),
-    )
-    return {"matched": n_matched, "inserted": n_inserted,
-            "not_matched_by_source": n_nms, "snapshot_id": snap_id}
 
 
 _ICEBERG_TO_ARROW = {
@@ -5607,7 +5326,6 @@ def rewrite_deletion_vectors(
     from cloudfloe_spark.sources import iceberg_meta as im
     from cloudfloe_spark.sources import puffin
     from cloudfloe_spark.sources.iceberg_fixture import (
-        CommitConflictError,
         _DATA_FILE_KEYS,
         _MANIFEST_LIST_SCHEMA,
         _MANIFEST_SCHEMA,
@@ -5782,7 +5500,6 @@ def rewrite_position_deletes(
     (metadata-scale), one range-partitioned sorted write, footer-only
     driver work.
     """
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from cloudfloe_spark.sources import iceberg_meta as im
@@ -5820,35 +5537,19 @@ def rewrite_position_deletes(
     )
     try:
         n = dels.count()
-        out_dir = os.path.join(
-            root, "data",
-            f"deletes-rw-{timestamp_ms}-{_uuid.uuid4().hex[:8]}",
-        )
-        files: list = []
-        if n:
-            n_files = max(1, -(-n // rows_per_delete_file))
-            (
-                dels.repartitionByRange(
-                    n_files, F.col("file_path"), F.col("pos")
-                )
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("errorifexists")
-                .parquet(out_dir)
+        files = (
+            _write_position_deletes(
+                root, dels, n, rows_per_delete_file, timestamp_ms,
+                tag="deletes-rw",
             )
-            for f in sorted(
-                globmod.glob(os.path.join(out_dir, "*.parquet"))
-            ):
-                cnt = pq.ParquetFile(f).metadata.num_rows
-                if cnt:
-                    files.append((f, cnt))
+            if n
+            else []
+        )
     finally:
         dels.unpersist()
     # any conflicting commit may change the delete/live sets this
     # consolidation summarizes — the op is cheap (delete-set-sized) and
     # idempotent, so it simply RE-RUNS rather than rebasing (r10)
-    def _not_rebaseable():
-        return False
-
     snap_id = _commit_with_rebase(
         root, "rewrite_position_deletes",
         lambda mp: commit_delete_rewrite_snapshot(
@@ -5856,7 +5557,7 @@ def rewrite_position_deletes(
             expected_metadata_path=mp,
         ),
         meta_path,
-        _not_rebaseable,
+        lambda: False,
     )
     return {
         "files_before": len(pos),

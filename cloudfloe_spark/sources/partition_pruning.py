@@ -39,6 +39,7 @@ import datetime
 import json
 import re
 import struct
+import threading
 from typing import Any, Optional
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
@@ -470,6 +471,25 @@ def _join_leaves(node: Any) -> list[dict]:
     return out
 
 
+_PARSER_CON = None
+_PARSER_LOCK = threading.Lock()
+
+
+def _parser_cursor():
+    """A fresh cursor on a module-owned DuckDB connection. DuckDB's
+    module-level default connection (``duckdb.execute``) is not
+    thread-safe, and the parse runs on concurrent service request
+    threads; a cursor per call is. The lock covers only connection and
+    cursor creation, so parses themselves run in parallel."""
+    global _PARSER_CON
+    with _PARSER_LOCK:
+        if _PARSER_CON is None:
+            import duckdb
+
+            _PARSER_CON = duckdb.connect()
+        return _PARSER_CON.cursor()
+
+
 def extract_scan_conjuncts(
     sql: str, view_names: set[str]
 ) -> dict[str, list[tuple]]:
@@ -484,10 +504,14 @@ def extract_scan_conjuncts(
     extended rows an outer join fabricates — see _conjuncts_from_where).
     Any parse failure returns {} (every scan reads unpruned)."""
     try:
-        import duckdb
-
         lit = sql.replace("'", "''")
-        raw = duckdb.execute(f"SELECT json_serialize_sql('{lit}')").fetchone()[0]
+        cur = _parser_cursor()
+        try:
+            raw = cur.execute(
+                f"SELECT json_serialize_sql('{lit}')"
+            ).fetchone()[0]
+        finally:
+            cur.close()
         ast = json.loads(raw)
     except Exception:
         return {}

@@ -14,6 +14,7 @@ stay declarative. Nothing here collects to the driver.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,6 +90,7 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
 
 
 _SHIPPED_CONTEXTS: set[int] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -99,7 +101,12 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     able to import it. A caller-provided SparkSession (the driver harness,
     a notebook, a real cluster) won't have the repo on the workers'
     PYTHONPATH — this makes every query self-sufficient regardless of
-    deployment layout."""
+    deployment layout.
+
+    Concurrent first calls (service request threads) serialize on a lock:
+    a second writer rewriting the zip after Spark registered it would
+    make every later task fail with "exists and does not match
+    contents". Already-shipped contexts return before the lock."""
     sc = spark.sparkContext
     key = id(sc)
     if key in _SHIPPED_CONTEXTS:
@@ -107,23 +114,26 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     import tempfile
     import zipfile
 
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"cloudfloe_spark_pkg_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _dirnames, filenames in os.walk(
-            os.path.join(pkg_root, "cloudfloe_spark")
-        ):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, pkg_root))
-    try:
-        sc.addPyFile(zpath)
-    except Exception:
-        pass  # e.g. late addition disallowed; per-closure self-containment
-    _SHIPPED_CONTEXTS.add(key)
+    with _SHIP_LOCK:
+        if key in _SHIPPED_CONTEXTS:
+            return
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zpath = os.path.join(
+            tempfile.gettempdir(), f"cloudfloe_spark_pkg_{os.getpid()}.zip"
+        )
+        with zipfile.ZipFile(zpath, "w") as z:
+            for dirpath, _dirnames, filenames in os.walk(
+                os.path.join(pkg_root, "cloudfloe_spark")
+            ):
+                for fn in filenames:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        z.write(full, os.path.relpath(full, pkg_root))
+        try:
+            sc.addPyFile(zpath)
+        except Exception:
+            pass  # e.g. late addition disallowed; per-closure self-containment
+        _SHIPPED_CONTEXTS.add(key)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

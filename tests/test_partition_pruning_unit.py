@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 import struct
+import sys
 
 from cloudfloe_spark.sources import partition_pruning as pp
 
@@ -196,6 +197,58 @@ class TestConjunctExtraction:
 
     def test_unparseable_sql_returns_empty(self):
         assert pp.extract_scan_conjuncts("NOT SQL AT ALL (", {"v1"}) == {}
+
+    def test_concurrent_parses_match_single_thread(self):
+        # the service parses on concurrent request threads; DuckDB's
+        # module-level default connection is not thread-safe, so every
+        # parse must run on a cursor of its own
+        from concurrent.futures import ThreadPoolExecutor
+
+        inputs = [
+            ("SELECT * FROM v1 WHERE ts >= TIMESTAMP '2024-03-01' AND n = 5",
+             {"v1"}),
+            ("SELECT t.x FROM v1 AS t WHERE t.lang = 'en'", {"v1"}),
+            ("SELECT * FROM v1 WHERE 5 < n", {"v1"}),
+            ("SELECT * FROM v1 WHERE a IN ('x','y') AND b BETWEEN 2 AND 9",
+             {"v1"}),
+            ("SELECT * FROM v1 WHERE a = 1 OR b = 2", {"v1"}),
+            ("SELECT * FROM v1 JOIN v2 ON v1.k = v2.k "
+             "WHERE v1.a = 1 AND v2.b = 2 AND c = 3", {"v1", "v2"}),
+            ("SELECT * FROM v1 AS x JOIN t2 ON x.k = t2.k "
+             "JOIN t3 ON t3.k = x.k WHERE x.d >= '2024-01-01'", {"v1"}),
+            ("SELECT * FROM v1, t2 WHERE v1.a = 1 AND v1.k = t2.k", {"v1"}),
+            ("SELECT * FROM t0 LEFT JOIN v1 ON t0.k = v1.k "
+             "WHERE v1.a IS NULL AND v1.b IS NOT NULL", {"v1"}),
+            ("SELECT * FROM v1 a JOIN v1 b ON a.k = b.k WHERE a.x = 1",
+             {"v1"}),
+            ("SELECT * FROM t0 LEFT JOIN v1 ON t0.k = v1.k AND v1.a = 1",
+             {"v1"}),
+            ("SELECT * FROM v1 WHERE a = 1 UNION ALL SELECT * FROM v1",
+             {"v1"}),
+            ("WITH c AS (SELECT * FROM v1 WHERE d = '2024-01-01') "
+             "SELECT count(*) FROM c", {"v1"}),
+            ("NOT SQL AT ALL (", {"v1"}),
+            ("SELECT * FROM v1 WHERE a IS NULL AND b IS NOT NULL", {"v1"}),
+        ]
+        expected = [pp.extract_scan_conjuncts(s, v) for s, v in inputs]
+
+        def worker(_):
+            return [
+                [pp.extract_scan_conjuncts(s, v) for s, v in inputs]
+                for _ in range(50)
+            ]
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as ex:
+                results = list(ex.map(worker, range(8), timeout=120))
+        finally:
+            sys.setswitchinterval(interval)
+        assert len(results) == 8
+        for per_thread in results:
+            for got in per_thread:
+                assert got == expected
 
 
 _DAY_SPEC = [
